@@ -3,7 +3,6 @@ package graft.sources.bucketed
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -38,6 +37,21 @@ import org.apache.spark.sql.types.StructType
   * versions (copy-on-write publishes replace only touched buckets), so
   * retention costs O(changed buckets), not O(table × versions) — the
   * same reason a real store can keep an MVCC window at 100 TB.
+  *
+  * STATE AND LOCKING: a table's state is one immutable [[TableState]]
+  * (history, the config its manifests persist, and what only this
+  * process knows). A base table and its WAP branches (`base#branch`)
+  * form a [[Lineage]] — one directory, one GC domain — whose monitor is
+  * the commit lock of all of them: every publish, drop, unload, reopen,
+  * refresh and vacuum holds it, and commits to different lineages never
+  * wait on each other. No operation holds two lineage locks; pool tasks
+  * a lock holder joins ([[FileStore.spillPool]]) never take one (the
+  * holder would deadlock against its own workers). Readers never lock:
+  * every state change installs a new TableState by compare-and-set, so
+  * config writes outside the lock (stat columns, DML mode, refresh
+  * policy) and commits never lose each other's updates. The version
+  * counter and commit stamps stay process-global atomics. A directory
+  * belongs to one lineage.
   */
 object BucketStore {
 
@@ -140,17 +154,6 @@ object BucketStore {
     def posOf(i: Int): Int = if (pos == null) i else pos(i)
   }
 
-  // — FILE SUBSTRATE (round 15): when enabled, every publish spills its
-  //   CHANGED buckets to immutable parquet files and writes a JSON
-  //   manifest per version ([[FileStore]]) — a snapshot IS a manifest of
-  //   file references, untouched buckets re-reference the previous
-  //   version's files (COW at file granularity), tables reopen in a
-  //   fresh JVM from the directory alone ([[openFromDisk]]), and blocks
-  //   evict/re-load lazily ([[evictTable]], [[BucketBlock.rows]]) so
-  //   serving never requires the whole table in heap. The in-heap
-  //   arrays become a CACHE over the file set instead of the substrate.
-  @volatile var fileBackingEnabled: Boolean = true
-
   /** Where table directories live; override in specs for a durable
     * location (default: one temp root per JVM).
     */
@@ -159,37 +162,154 @@ object BucketStore {
     java.nio.file.Files.createTempDirectory("graft-bucket-store-")
   def storageRoot: java.nio.file.Path = storageRootOverride.getOrElse(defaultStorageRoot)
 
-  /** Tables that fell back to heap-only (a schema the parquet spill
-    * cannot express, e.g. NullType) — the spill degrades loudly-logged
-    * rather than failing the commit.
+  /** Row-level DML strategy per table: `copy-on-write` (default)
+    * rewrites owning buckets through the group-replace path;
+    * `merge-on-read` commits deletion vectors + delta rows
+    * ([[applyDelta]]) folded at read. Operational config, like the
+    * stat-column registry — set via TBLPROPERTIES
+    * (`write.dml.mode`) or [[setDmlMode]].
     */
-  private val heapOnly = ConcurrentHashMap.newKeySet[String]()
+  val CopyOnWrite = "copy-on-write"
+  val MergeOnRead = "merge-on-read"
 
-  /** Each table's directory, pinned at first publish (stable even if
-    * the root override changes mid-life).
+  /** A fresh table's config: copy-on-write, no CHECK, tags, stat
+    * columns, txn marks or retention floor.
     */
-  private val tableDirs = new ConcurrentHashMap[String, java.nio.file.Path]()
+  private val DefaultConfig = FileStore.TableConfig(CopyOnWrite, None, Map.empty, Set.empty)
 
-  def isFileBacked(name: String): Boolean =
-    fileBackingEnabled && !heapOnly.contains(name) && tableDirs.containsKey(name)
+  // — FILE SUBSTRATE (round 15): every publish spills its CHANGED
+  //   buckets to immutable parquet files and writes a JSON manifest per
+  //   version ([[FileStore]]) — a snapshot IS a manifest of file
+  //   references, untouched buckets re-reference the previous version's
+  //   files (COW at file granularity), tables reopen in a fresh JVM from
+  //   the directory alone ([[openFromDisk]]), and blocks evict/re-load
+  //   lazily ([[evictTable]], [[BucketBlock.rows]]) so serving never
+  //   requires the whole table in heap. The in-heap arrays are a CACHE
+  //   over the file set, not the substrate.
 
+  /** Everything the store knows about ONE table. Immutable: a change
+    * installs a new copy ([[Lineage]]), and dropping or unloading the
+    * table removes its one entry — nothing of it survives elsewhere.
+    * `config` is exactly what the table's manifests persist
+    * ([[FileStore.TableConfig]]: DML mode, CHECK, tags — including a
+    * branch's fork point, [[ForkTag]] — stat columns, txn marks,
+    * retention floor); the other fields live only in this process.
+    */
+  private final case class TableState(
+      // retained snapshots, oldest → newest; `.last` is current
+      history: Vector[BucketTable],
+      // the first version ever published (survives vacuum; the version
+      // counter is global, so without this a CDC window below the
+      // table's creation would be indistinguishable from a vacuumed one)
+      firstVersion: Long,
+      config: FileStore.TableConfig = DefaultConfig,
+      // pinned at the first spill (stable even if the root override
+      // changes mid-life), or the directory [[openFromDisk]] was given
+      dir: Option[java.nio.file.Path] = None,
+      // a schema the parquet spill cannot express (e.g. NullType) — the
+      // spill degrades loudly-logged rather than failing the commit
+      heapOnly: Boolean = false,
+      // reader-side staleness policy ([[setRefreshPolicy]]) and the time
+      // of its last directory look
+      refreshPolicyMs: Option[Long] = None,
+      lastStalenessCheckMs: Option[Long] = None,
+      lastDeleteOutcome: Option[DeleteOutcome] = None) {
+    def fileBacked: Boolean = dir.isDefined && !heapOnly
+  }
+
+  /** A base table and its WAP branches. Its monitor is the commit lock
+    * of every table in it; its table map is replaced whole by
+    * compare-and-set, so readers never take the lock.
+    */
+  private final class Lineage {
+    private val tables =
+      new java.util.concurrent.atomic.AtomicReference(Map.empty[String, TableState])
+    def all: Map[String, TableState] = tables.get
+    def get(name: String): Option[TableState] = tables.get.get(name)
+    def put(name: String, st: TableState): Unit = tables.updateAndGet(_.updated(name, st)): Unit
+    def remove(name: String): Option[TableState] = tables.getAndUpdate(_ - name).get(name)
+    /** Apply `f` to `name`'s state, `init` standing in if it has none. */
+    def upsert(name: String, init: TableState)(f: TableState => TableState): Unit =
+      tables.updateAndGet(m => m.updated(name, f(m.getOrElse(name, init)))): Unit
+    /** Apply `f` to `name`'s state; a no-op if the table is gone. */
+    def update(name: String)(f: TableState => TableState): Unit =
+      tables.updateAndGet(m => m.get(name).fold(m)(st => m.updated(name, f(st)))): Unit
+  }
+
+  /** THE table map: lineage (base table name) → its tables' states. */
+  private val lineages = new ConcurrentHashMap[String, Lineage]()
+
+  private def lineageKey(name: String): String = {
+    val i = name.indexOf('#')
+    if (i < 0) name else name.substring(0, i)
+  }
+
+  private def lineageOf(name: String): Option[Lineage] = Option(lineages.get(lineageKey(name)))
+
+  /** The tables of `name`'s lineage (itself included when loaded). */
+  private def lineageTables(name: String): Map[String, TableState] =
+    lineageOf(name).fold(Map.empty[String, TableState])(_.all)
+
+  private def stateOf(name: String): Option[TableState] = lineageOf(name).flatMap(_.get(name))
+
+  private def state(name: String): TableState = {
+    val st = stateOf(name)
+    require(st.isDefined, s"BucketStore has no table '$name' — call BucketStore.load first")
+    st.get
+  }
+
+  /** Change `name`'s state; a no-op if the table is gone. */
+  private def update(name: String)(f: TableState => TableState): Unit =
+    lineageOf(name).foreach(_.update(name)(f))
+
+  /** Change the config of `name`, which must exist. */
+  private def configure(name: String)(f: FileStore.TableConfig => FileStore.TableConfig): Unit = {
+    state(name): Unit
+    update(name)(st => st.copy(config = f(st.config)))
+  }
+
+  /** Install a new table's state (callers hold its lineage lock). */
+  private def install(name: String, st: TableState): Unit = lineageOf(name).get.put(name, st)
+
+  /** Run `body` holding `name`'s lineage lock — THE commit lock. The
+    * lineage is created on first use (the one `computeIfAbsent` every
+    * table creation goes through) and retired when the lock is
+    * released with no table left in it; a thread that waited on a
+    * retired lineage retries on the live one, so a lineage has exactly
+    * one lock at a time. Reentrant (publish → auto-compact, conflict →
+    * refresh, publish_branch → drop_branch all stay in one lineage).
+    */
+  private def locked[A](name: String)(body: => A): A = {
+    val key = lineageKey(name)
+    var out: Option[A] = None
+    while (out.isEmpty) {
+      val lin = lineages.computeIfAbsent(key, _ => new Lineage)
+      lin.synchronized {
+        if (lineages.get(key) eq lin)
+          out = Some(try body finally if (lin.all.isEmpty) lineages.remove(key, lin))
+      }
+    }
+    out.get
+  }
+
+  /** Spec hook: run `body` holding `name`'s lineage lock. */
+  private[bucketed] def withLineageLock[A](name: String)(body: => A): A = locked(name)(body)
+
+  def isFileBacked(name: String): Boolean = stateOf(name).exists(_.fileBacked)
+
+  /** `name`'s directory: the pinned one, or where its first spill will
+    * land.
+    */
   def tableDir(name: String): java.nio.file.Path =
-    tableDirs.computeIfAbsent(name, n => {
-      val safe = n.replaceAll("[^A-Za-z0-9._-]", "_").take(80)
-      storageRoot.resolve(
-        safe + "-" + Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(n)))
-    })
+    stateOf(name).flatMap(_.dir).getOrElse(defaultDir(name))
 
-  /** Retained snapshots per table, oldest → newest; `.last` is current. */
-  private val tables = new ConcurrentHashMap[String, Vector[BucketTable]]()
+  private def defaultDir(name: String): java.nio.file.Path = {
+    val safe = name.replaceAll("[^A-Za-z0-9._-]", "_").take(80)
+    storageRoot.resolve(
+      safe + "-" + Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(name)))
+  }
+
   private val versions = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Each table's FIRST version ever published (survives vacuum; the
-    * version counter is global, so without this a CDC window below a
-    * table's creation version would be indistinguishable from a
-    * vacuumed one).
-    */
-  private val firstVersions = new ConcurrentHashMap[String, java.lang.Long]()
 
   /** MVCC retention window: snapshots kept per table. Old enough for
     * any in-flight scan or CDC replay at test scale; a real store
@@ -209,10 +329,6 @@ object BucketStore {
     */
   def fleetOf(nHosts: Int): Seq[String] = (0 until nHosts).map(i => s"host-$i")
 
-  /** Append `next` to `name`'s history under the retention cap. All
-    * version publishes funnel through here (single synchronized
-    * choke point = the store's commit protocol).
-    */
   /** Commit-timestamp source (micros since epoch), injectable so specs
     * and gated queries stay deterministic. Stamps are forced STRICTLY
     * increasing across the store (`max(clock, last+1)`) so timestamp
@@ -226,23 +342,29 @@ object BucketStore {
     lastStamp.updateAndGet(prev => math.max(prev + 1, c))
   }
 
-  private def publish(name: String, next: BucketTable): Unit = {
+  /** Append `next` to `name`'s history under the retention cap. All
+    * version publishes funnel through here, under the lineage lock (the
+    * store's commit protocol). `fork` is a new branch's state, not yet
+    * installed; every other publish extends the installed state.
+    */
+  private def publish(name: String, next: BucketTable, fork: Option[TableState] = None): Unit = {
     val stamped = next.copy(commitTs = nextStamp())
-    val hist = tables.getOrDefault(name, Vector.empty)
-    firstVersions.putIfAbsent(name, stamped.version)
-    val prev = hist.lastOption
-    spillAndManifest(name, stamped, prev)
-    val newHist = (hist :+ stamped).takeRight(RetainedVersions)
-    tables.put(name, newHist)
+    val st0 = fork.getOrElse(state(name))
+    val prev = st0.history.lastOption
+    val first = if (prev.isEmpty) stamped.version else st0.firstVersion
+    val st = spillAndManifest(name, st0.copy(firstVersion = first), stamped, prev)
+    val newHist = (st0.history :+ stamped).takeRight(RetainedVersions)
+    lineageOf(name).get.upsert(name, st)(_.copy(
+      history = newHist, firstVersion = first, dir = st.dir, heapOnly = st.heapOnly))
     // disk retention follows heap retention: when this publish trimmed
     // a version out of the MVCC window, drop the files no retained
-    // manifest references — roots are the UNION of every lineage
-    // sharing the directory (a base table and its WAP branches)
-    if (hist.length + 1 > RetainedVersions && isFileBacked(name)) {
-      val dir = tableDir(name)
+    // manifest references — roots are the UNION of every table of the
+    // lineage sharing the directory (a base table and its WAP branches)
+    if (st0.history.length + 1 > RetainedVersions && st.fileBacked) {
+      val dir = st.dir.get
       // automatic GC honors the directory's strictest retention floor
-      FileStore.gc(dir, retainedVersionsSharing(dir),
-        math.max(vacuumFloorOf(name), floorSharing(dir, except = name))): Unit
+      FileStore.gc(dir, retainedVersionsSharing(name, dir),
+        math.max(vacuumFloorOf(name), floorSharing(name, dir, except = name))): Unit
     }
     // commit-time statistics: warm zone maps/sketches for exactly the
     // buckets this commit REPLACED (storage-shared buckets — same
@@ -251,7 +373,7 @@ object BucketStore {
     // prunes with ZERO plan-time stat passes. At 100 TB this pass runs
     // in the producer's write task and lands in commit metadata; the
     // cost discipline is identical: ∝ changed buckets, never the table.
-    val cols = statColumns.getOrDefault(name, Set.empty)
+    val cols = statColumnsOf(name)
     if (cols.nonEmpty) {
       stamped.buckets.indices.foreach { b =>
         val shared = prev.exists(p => stamped.buckets.sharesWith(p.buckets, b))
@@ -271,17 +393,19 @@ object BucketStore {
     * exactly the buckets this commit changed (blocks already carrying a
     * file ref — retained via [[BucketBlocks.mapRetaining]] or resolved
     * by row-array identity — re-reference their existing file), spill
-    * changed MOR deltas, and write the version's manifest. A spill
-    * failure (a schema parquet cannot express) degrades the TABLE to
-    * heap-only with a stderr note — never fails the commit.
+    * changed MOR deltas, and write the version's manifest with `st`'s
+    * config. Returns `st` with its directory pinned — or, when the
+    * spill fails (a schema parquet cannot express), degraded to
+    * heap-only with a stderr note: that never fails the commit.
     */
-  private def spillAndManifest(name: String, stamped: BucketTable,
-      prev: Option[BucketTable], replaceCurrent: Boolean = false): Unit = {
-    if (!fileBackingEnabled || heapOnly.contains(name)) return
+  private def spillAndManifest(name: String, st0: TableState, stamped: BucketTable,
+      prev: Option[BucketTable], replaceCurrent: Boolean = false): TableState = {
+    if (st0.heapOnly) return st0
+    val dir = st0.dir.getOrElse(defaultDir(name))
+    val st = st0.copy(dir = Some(dir))
     try {
-      val dir = tableDir(name)
       // CROSS-PROCESS conflict pre-flight (the in-JVM path is already
-      // serialized by the commit monitor): a manifest at or past this
+      // serialized by the lineage lock): a manifest at or past this
       // commit's version means another PROCESS committed to this
       // directory since our state was read. Seed the version counter
       // past the directory head so the retry allocates a winning
@@ -290,21 +414,18 @@ object BucketStore {
       // CAS backstop for the list-then-write window
       // ([[FileStore.writeManifest]] fails on an existing target).
       // replaceCurrent (analyze's in-place stats rewrite) compares
-      // against THIS lineage's head only: versions are globally unique
-      // across lineages sharing the directory, so a WAP branch always
-      // holds base-head+1 right after its fork — a lineage-blind max
+      // against THIS table's head only: versions are globally unique
+      // across the lineage sharing the directory, so a WAP branch always
+      // holds base-head+1 right after its fork — a table-blind max
       // would make the base table's analyze a deterministic,
       // unretryable conflict. Ordinary publishes keep the filename max
       // (cheapest listing; any manifest at/past our version means our
-      // counter is stale regardless of lineage).
+      // counter is stale regardless of table).
       val dirHead =
         if (replaceCurrent) FileStore.maxManifestVersionOf(dir, name)
         else FileStore.maxManifestVersion(dir)
       if (if (replaceCurrent) dirHead > stamped.version else dirHead >= stamped.version) {
         versions.updateAndGet(v => math.max(v, dirHead))
-        // absorb the foreign commits NOW so the loser's plain retry
-        // re-plans against the new head (refresh-and-retry)
-        refreshFromDisk(name): Unit
         throw new ConcurrentWriteException(
           s"commit of '$name' v${stamped.version} lost to a concurrent writer: the " +
             s"directory already holds manifest v$dirHead — retry against the new head")
@@ -343,7 +464,7 @@ object BucketStore {
       // columns ride the manifest. Untouched buckets hit the
       // (path, col) cache — the pass costs ∝ changed buckets, and a
       // reopened table plans pruning with ZERO block reads.
-      val cols = statColumnsOf(name)
+      val cols = st.config.statColumns
       val stats: Map[Int, Map[String, Option[BucketSkip.ColSkip]]] =
         if (cols.isEmpty) Map.empty
         else stamped.buckets.indices.iterator.flatMap { b =>
@@ -361,24 +482,24 @@ object BucketStore {
             }.toMap
           }
         }.toMap
-      FileStore.writeManifest(dir, name, stamped, morFiles, rbFile,
-        Option(firstVersions.get(name)).map(_.toLong).getOrElse(stamped.version),
-        FileStore.TableConfig(dmlModeOf(name), checkOf(name), tagsOf(name),
-          statColumnsOf(name), txnsOf(name), vacuumFloorOf(name)),
+      FileStore.writeManifest(dir, name, stamped, morFiles, rbFile, st.firstVersion, st.config,
         stats, replace = replaceCurrent)
+      st
     } catch {
       // a lost commit race is a RETRYABLE conflict, never a reason to
       // degrade the table to heap-only — propagate it to the writer,
-      // with the foreign commits already absorbed for the retry
+      // with the foreign commits absorbed NOW so the loser's plain
+      // retry re-plans against the new head (refresh-and-retry)
       case e: ConcurrentWriteException =>
-        versions.updateAndGet(v => math.max(v, FileStore.maxManifestVersion(tableDir(name))))
+        versions.updateAndGet(v => math.max(v, FileStore.maxManifestVersion(dir)))
+        update(name)(_.copy(dir = Some(dir)))
         refreshFromDisk(name): Unit
         throw e
       case scala.util.control.NonFatal(e) =>
         if (sys.props.contains("graft.debug.spill")) e.printStackTrace()
-        heapOnly.add(name)
         System.err.println(s"[graft-buckets] file backing disabled for '$name': " +
           s"${e.getClass.getSimpleName}: ${e.getMessage} — table is heap-only from here")
+        st.copy(heapOnly = true)
     }
   }
 
@@ -398,29 +519,21 @@ object BucketStore {
     * deduplicated by path so COW sharing — and the identity discipline
     * every cache keys on — is reconstructed, not just the data.
     */
-  def openFromDisk(name: String, dir: java.nio.file.Path): Long = synchronized {
+  def openFromDisk(name: String, dir: java.nio.file.Path): Long = locked(name) {
     require(!exists(name), s"openFromDisk: table '$name' already in the store")
-    // a directory can hold several lineages (a base table and its WAP
-    // branches): serve exactly the named one. Legacy dirs whose
-    // manifests predate the name (or were renamed) fall back to all.
+    // a directory can hold several tables of one lineage (a base table
+    // and its WAP branches): serve exactly the named one. Legacy dirs
+    // whose manifests predate the name (or were renamed) fall back to all.
     val all = FileStore.readManifests(dir)
     val named = all.filter(_.name == name)
     val ms = if (named.nonEmpty) named else all
     val hist = snapshotsOf(ms, scala.collection.mutable.HashMap[String, BucketBlock]())
-    tables.put(name, hist.toVector)
-    firstVersions.put(name, ms.last.firstVersion)
-    tableDirs.put(name, dir)
-    val cfg = ms.last.config
-    dmlModes.put(name, cfg.dmlMode)
-    cfg.check.foreach(checks.put(name, _))
-    if (cfg.tags.nonEmpty) tags.put(name, cfg.tags)
-    if (cfg.txns.nonEmpty) appliedTxns.put(name, cfg.txns)
-    if (cfg.vacuumMinAgeMs > 0L) vacuumFloors.put(name, cfg.vacuumMinAgeMs)
-    registerStatColumns(name, cfg.statColumns)
-    // keep the global counters monotone past EVERY lineage in the
+    // exactly what the manifests persist — as after a real restart
+    install(name, TableState(hist.toVector, ms.last.firstVersion, ms.last.config, Some(dir)))
+    // keep the global counters monotone past EVERY table in the
     // directory, not just the one being reopened: a shared WAP-branch
     // dir holds higher-versioned branch manifests, and seeding from
-    // the named lineage alone would let the next publish reuse (and
+    // the named table alone would let the next publish reuse (and
     // with a replacing write, silently clobber) a branch's version
     versions.updateAndGet(v => math.max(v, all.iterator.map(_.version).max))
     lastStamp.updateAndGet(s => math.max(s, all.iterator.map(_.commitTs).max))
@@ -536,7 +649,7 @@ object BucketStore {
 
   /** REFRESH-AND-RETRY, the second half of the cross-process commit
     * protocol: absorb commits that landed in the table's directory
-    * from ANOTHER process — every manifest of this lineage newer than
+    * from ANOTHER process — every manifest of this table newer than
     * the in-heap head — appending their snapshots to the retained
     * history (blocks shared BY PATH with the existing history, so COW
     * identity and the heap cache survive) and adopting the newest
@@ -548,38 +661,39 @@ object BucketStore {
     * base — Delta/Iceberg's refresh-and-retry semantics. Returns the
     * number of foreign commits absorbed.
     */
-  def refreshFromDisk(name: String): Int = synchronized {
-    if (!isFileBacked(name)) return 0
-    val dir = tableDir(name)
-    val hist = tables.get(name)
-    if (hist == null || hist.isEmpty) return 0 // a first publish has no head to refresh
-    val head = hist.last.version
-    val fresh = FileStore.readManifests(dir)
-      .filter(m => m.name == name && m.version > head)
-    if (fresh.isEmpty) return 0
-    // share blocks with the existing history by path: a foreign commit
-    // re-referencing our files must resolve to OUR (possibly loaded)
-    // block instances, not cold duplicates
-    val blockByPath = scala.collection.mutable.HashMap[String, BucketBlock]()
-    hist.foreach(_.buckets.blocks.foreach(b =>
-      b.file.filter(_.path.nonEmpty).foreach(f => blockByPath.getOrElseUpdate(f.path, b))))
-    val absorbed = snapshotsOf(fresh, blockByPath)
-    tables.put(name, (hist ++ absorbed).takeRight(RetainedVersions))
-    val cfg = fresh.last.config
-    dmlModes.put(name, cfg.dmlMode)
-    cfg.check.foreach(checks.put(name, _))
-    if (cfg.tags.nonEmpty) tags.merge(name, cfg.tags, (a, b) => a ++ b)
-    recordTxnsFrom(name, cfg.txns)
-    // adopt the newest commit's durable retention floor like dmlMode —
-    // but never WEAKEN a stricter local floor (an operator's live
-    // `CALL graft.retention` must survive absorbing an older commit)
-    if (cfg.vacuumMinAgeMs > 0L)
-      vacuumFloors.merge(name, cfg.vacuumMinAgeMs,
-        (a, b) => if (a.longValue >= b.longValue) a else b)
-    registerStatColumns(name, cfg.statColumns)
-    versions.updateAndGet(v => math.max(v, fresh.last.version))
-    lastStamp.updateAndGet(s => math.max(s, fresh.last.commitTs))
-    absorbed.size
+  def refreshFromDisk(name: String): Int = locked(name) {
+    val fresh = stateOf(name).filter(_.fileBacked).toSeq.flatMap { st =>
+      val head = st.history.last.version
+      FileStore.readManifests(st.dir.get).filter(m => m.name == name && m.version > head)
+    }
+    if (fresh.isEmpty) 0
+    else {
+      val hist = state(name).history
+      // share blocks with the existing history by path: a foreign commit
+      // re-referencing our files must resolve to OUR (possibly loaded)
+      // block instances, not cold duplicates
+      val blockByPath = scala.collection.mutable.HashMap[String, BucketBlock]()
+      hist.foreach(_.buckets.blocks.foreach(b =>
+        b.file.filter(_.path.nonEmpty).foreach(f => blockByPath.getOrElseUpdate(f.path, b))))
+      val absorbed = snapshotsOf(fresh, blockByPath)
+      val cfg = fresh.last.config
+      // adopt the newest commit's DML mode, CHECK and stat columns, the
+      // union of tags and txn marks, and its durable retention floor —
+      // but never WEAKEN a stricter local floor (an operator's live
+      // `CALL graft.retention` must survive absorbing an older commit)
+      update(name)(st => st.copy(
+        history = (hist ++ absorbed).takeRight(RetainedVersions),
+        config = st.config.copy(
+          dmlMode = cfg.dmlMode,
+          check = cfg.check.orElse(st.config.check),
+          tags = st.config.tags ++ cfg.tags,
+          statColumns = st.config.statColumns ++ cfg.statColumns,
+          txns = mergeTxns(st.config.txns, cfg.txns),
+          vacuumMinAgeMs = math.max(st.config.vacuumMinAgeMs, cfg.vacuumMinAgeMs))))
+      versions.updateAndGet(v => math.max(v, fresh.last.version))
+      lastStamp.updateAndGet(s => math.max(s, fresh.last.commitTs))
+      absorbed.size
+    }
   }
 
   // ——— READER-SIDE REFRESH (round 17) ———
@@ -596,38 +710,39 @@ object BucketStore {
   // absorb whatever foreign commits landed. Off by default: snapshot
   // isolation stays the contract unless the table opts in.
 
-  private val refreshPolicies = new ConcurrentHashMap[String, java.lang.Long]()
-  private val lastStalenessCheck = new ConcurrentHashMap[String, java.lang.Long]()
-
   /** Opt this table into staleness-triggered refresh: scans and
     * streaming offset checks re-list the directory when the last look
     * is older than `maxStalenessMs` (0 = every scan).
     */
   def setRefreshPolicy(name: String, maxStalenessMs: Long): Unit = {
     require(maxStalenessMs >= 0, s"refresh policy must be >= 0 ms, got $maxStalenessMs")
-    refreshPolicies.put(name, maxStalenessMs)
-    ()
+    state(name): Unit
+    update(name)(_.copy(refreshPolicyMs = Some(maxStalenessMs)))
   }
 
-  def clearRefreshPolicy(name: String): Unit = { refreshPolicies.remove(name); () }
+  def clearRefreshPolicy(name: String): Unit = update(name)(_.copy(refreshPolicyMs = None))
+
+  private[bucketed] def refreshPolicyOf(name: String): Option[Long] =
+    stateOf(name).flatMap(_.refreshPolicyMs)
 
   /** The staleness-policy hook ([[BucketedScanBuilder]] planning,
     * [[BucketMicroBatchStream]] offset discovery): absorb foreign
     * commits iff the table opted in and the window elapsed. Returns
     * commits absorbed (0 on every no-op path). The directory head is
-    * LINEAGE-scoped — a WAP branch's higher version in the shared dir
-    * is not a foreign commit to this lineage.
+    * per TABLE — a WAP branch's higher version in the shared dir is not
+    * a foreign commit to its base.
     */
-  def maybeRefresh(name: String): Int = {
-    val policy = refreshPolicies.get(name)
-    if (policy == null || !isFileBacked(name)) return 0
-    val now = System.currentTimeMillis()
-    val last = lastStalenessCheck.get(name)
-    if (last != null && now - last < policy) return 0
-    lastStalenessCheck.put(name, now)
-    if (FileStore.maxManifestVersionOf(tableDir(name), name) > currentVersion(name))
-      refreshFromDisk(name)
-    else 0
+  def maybeRefresh(name: String): Int = stateOf(name) match {
+    case Some(st) if st.fileBacked && st.refreshPolicyMs.isDefined =>
+      val now = System.currentTimeMillis()
+      if (st.lastStalenessCheckMs.exists(now - _ < st.refreshPolicyMs.get)) 0
+      else {
+        update(name)(_.copy(lastStalenessCheckMs = Some(now)))
+        if (FileStore.maxManifestVersionOf(st.dir.get, name) > currentVersion(name))
+          refreshFromDisk(name)
+        else 0
+      }
+    case _ => 0
   }
 
   /** Skip statistics for (bucket, column) WITHOUT materializing the
@@ -690,14 +805,6 @@ object BucketStore {
     }
   }
 
-  /** Columns with data-skipping statistics maintained AT COMMIT for
-    * each table: registered by the first pushed filter that touches a
-    * column ([[BucketSplits.plan]]) or explicitly via
-    * `CALL graft.analyze` — from then on every publish keeps the
-    * changed buckets' stats warm and planning never pays a stat pass.
-    */
-  private val statColumns = new ConcurrentHashMap[String, Set[String]]()
-
   // ——— IDEMPOTENT WRITES (txnappid/txnversion write options) ———
   //
   // The Delta txn contract: a batch job tags its write with an
@@ -710,27 +817,18 @@ object BucketStore {
   // the EPOCH as the version, making micro-batch replay across a
   // query restart idempotent too.
 
-  private val appliedTxns = new ConcurrentHashMap[String, Map[String, Long]]()
-
   /** High-water txn version applied to `name` by `appId` (specs/ops). */
-  def txnVersionOf(name: String, appId: String): Option[Long] =
-    Option(appliedTxns.get(name)).flatMap(_.get(appId))
+  def txnVersionOf(name: String, appId: String): Option[Long] = txnsOf(name).get(appId)
 
   private[bucketed] def txnsOf(name: String): Map[String, Long] =
-    appliedTxns.getOrDefault(name, Map.empty)
+    stateOf(name).fold(Map.empty[String, Long])(_.config.txns)
 
   private def txnAlreadyApplied(name: String, txn: Option[(String, Long)]): Boolean =
     txn.exists { case (a, v) => txnVersionOf(name, a).exists(_ >= v) }
 
-  private def recordTxnsFrom(name: String, marks: Map[String, Long]): Unit =
-    marks.foreach { case (a, v) => recordTxn(name, Some((a, v))) }
-
-  private def recordTxn(name: String, txn: Option[(String, Long)]): Unit =
-    txn.foreach { case (a, v) =>
-      appliedTxns.merge(name, Map(a -> v), (old, nw) =>
-        old ++ nw.map { case (k, x) => k -> math.max(x, old.getOrElse(k, Long.MinValue)) })
-      ()
-    }
+  /** `marks` folded into `txns`, each app keeping its high-water mark. */
+  private def mergeTxns(txns: Map[String, Long], marks: Map[String, Long]): Map[String, Long] =
+    txns ++ marks.map { case (a, v) => a -> math.max(v, txns.getOrElse(a, Long.MinValue)) }
 
   /** Record the idempotency mark, then publish — and ROLL THE MARK BACK
     * if the publish fails. The record-before-manifest order is what
@@ -741,8 +839,8 @@ object BucketStore {
     */
   private def recordTxnAndPublish(name: String, txn: Option[(String, Long)],
       next: BucketTable): Unit = {
-    val before = appliedTxns.get(name) // immutable map (or null)
-    recordTxn(name, txn)
+    val before = txnsOf(name)
+    txn.foreach(t => configure(name)(c => c.copy(txns = mergeTxns(c.txns, Map(t)))))
     try publish(name, next)
     catch {
       case t: Throwable =>
@@ -753,16 +851,9 @@ object BucketStore {
         // streaming app committing cross-process), and clobbering it
         // back down would replay that foreign batch as a duplicate
         txn.foreach { case (a, v) =>
-          val prior = Option(before).flatMap(_.get(a))
-          appliedTxns.compute(name, (_, cur0) => {
-            val cur = if (cur0 == null) Map.empty[String, Long] else cur0
-            if (!cur.get(a).contains(v)) cur // foreign mark absorbed — keep it
-            else prior match {
-              case Some(p) => cur.updated(a, p)
-              case None => cur - a
-            }
-          })
-          ()
+          update(name)(st => st.copy(config = st.config.copy(txns =
+            if (!st.config.txns.get(a).contains(v)) st.config.txns // foreign mark absorbed — keep it
+            else before.get(a).fold(st.config.txns - a)(st.config.txns.updated(a, _)))))
         }
         throw t
     }
@@ -774,20 +865,29 @@ object BucketStore {
     * AFTER the last publish still survive a restart. Atomic
     * (temp + replace move); a no-op for heap-only tables.
     */
-  def refreshManifestStats(name: String): Unit = synchronized {
-    if (isFileBacked(name)) {
-      val hist = history(name)
-      spillAndManifest(name, hist.last, hist.dropRight(1).lastOption, replaceCurrent = true)
+  def refreshManifestStats(name: String): Unit = locked(name) {
+    val st = state(name)
+    if (st.fileBacked) {
+      val after = spillAndManifest(name, st, st.history.last, st.history.dropRight(1).lastOption,
+        replaceCurrent = true)
+      if (after.heapOnly) update(name)(_.copy(heapOnly = true))
     }
   }
 
+  /** Columns with data-skipping statistics maintained AT COMMIT for
+    * each table: registered by the first pushed filter that touches a
+    * column ([[BucketSplits.plan]]) or explicitly via
+    * `CALL graft.analyze` — from then on every publish keeps the
+    * changed buckets' stats warm and planning never pays a stat pass.
+    * Lock-free: scan planning never waits on a commit.
+    */
   def registerStatColumns(name: String, cols: Iterable[String]): Unit =
-    if (cols.nonEmpty) {
-      statColumns.merge(name, cols.toSet, (a, b) => a ++ b)
-      ()
-    }
+    if (!cols.forall(statColumnsOf(name).contains))
+      update(name)(st => st.copy(config = st.config.copy(
+        statColumns = st.config.statColumns ++ cols)))
 
-  def statColumnsOf(name: String): Set[String] = statColumns.getOrDefault(name, Set.empty)
+  def statColumnsOf(name: String): Set[String] =
+    stateOf(name).fold(Set.empty[String])(_.config.statColumns)
 
   /** Commit timestamp (micros) of retained snapshot `v` — what
     * `TIMESTAMP AS OF` resolves against. Loud if vacuumed/unknown.
@@ -813,11 +913,7 @@ object BucketStore {
   /** The first version ever published for `name` (not affected by
     * vacuum). Loud if the table does not exist.
     */
-  def firstVersion(name: String): Long = {
-    val v = firstVersions.get(name)
-    require(v != null, s"BucketStore has no table '$name'")
-    v
-  }
+  def firstVersion(name: String): Long = state(name).firstVersion
 
   /** Load a DataFrame into the store as `name`, hash-partitioned on
     * `keyCol` into `numBuckets` buckets, through the SAME distributed
@@ -849,7 +945,7 @@ object BucketStore {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     require(!replicate || numBuckets == 1,
       s"a replicated table has exactly ONE logical bucket (every host holds it); got $numBuckets")
-    synchronized {
+    locked(name) {
       if (!exists(name)) {
         createEmpty(name, StructType(df.schema.fields), keyCol, numBuckets, nHosts, clusterBy,
           replicate)
@@ -926,25 +1022,6 @@ object BucketStore {
     0
   }
 
-  /** The layout's row comparator: lexicographic over the compound key
-    * (nulls first — the order [[ClusterRange.sliceSortedCompound]]
-    * binary-searches) or unsigned Morton-code compare for a
-    * `zorder(...)` key ([[ZOrder.cmp]] — searched by nothing; it
-    * exists to make block zone maps tight). Every sort, merge, and
-    * fold shares this one dispatch, so the maintained invariant is
-    * identical across load/append/DML/recluster.
-    */
-  private def clusterRowCmp(schema: StructType, clusterCol: Option[String],
-      zBounds: Option[Array[Array[Long]]],
-      zKeyVersion: Int = ZOrder.KEY_VERSION): (Row, Row) => Int =
-    if (isZOrder(clusterCol)) {
-      val zk = zKeyFn(schema, clusterCol, zBounds, zKeyVersion)
-      (a, b) => ZOrder.cmp(zk(a), zk(b))
-    } else {
-      val key = clusterKeyOf(schema, clusterCol)
-      (a, b) => cmpClusterKeys(key(a), key(b))
-    }
-
   /** The effective Morton key of a z-layout: rank-normalized when the
     * table's boundaries are frozen ([[ZOrder.keyRanked]] — narrow and
     * wide dimensions weigh equally on the curve), raw bit interleave
@@ -968,12 +1045,17 @@ object BucketStore {
   def zKeyOf(t: BucketTable): Row => Array[Long] =
     zKeyFn(t.schema, t.clusterCol, t.zBounds, t.zKeyVersion)
 
-  /** (key extractor, key comparator) for the layout — the keyed twin
-    * of [[clusterRowCmp]], for the sort/merge paths that compute each
-    * row's key ONCE and compare keys after (per-COMPARISON extraction
-    * allocated a fresh key array on both sides of every compare —
-    * ~2·n·log n allocations per bucket sort, the dominant driver-side
-    * cost of a clustered load before round 21).
+  /** (key extractor, key comparator) for the layout: lexicographic over
+    * the compound key (nulls first — the order
+    * [[ClusterRange.sliceSortedCompound]] binary-searches) or unsigned
+    * Morton-code compare for a `zorder(...)` key ([[ZOrder.cmp]] —
+    * searched by nothing; it exists to make block zone maps tight).
+    * Every sort, merge, and fold shares this one dispatch, so the
+    * maintained invariant is identical across load/append/DML/recluster.
+    * Each row's key is computed ONCE and keys are compared after
+    * (per-COMPARISON extraction allocated a fresh key array on both
+    * sides of every compare — ~2·n·log n allocations per bucket sort,
+    * the dominant driver-side cost of a clustered load before round 21).
     */
   private def clusterKeyedCmp(schema: StructType, clusterCol: Option[String],
       zBounds: Option[Array[Array[Long]]],
@@ -1008,25 +1090,13 @@ object BucketStore {
 
   // ————— merge-on-read fold + DML-mode plumbing —————
 
-  /** Row-level DML strategy per table: `copy-on-write` (default)
-    * rewrites owning buckets through the group-replace path;
-    * `merge-on-read` commits deletion vectors + delta rows
-    * ([[applyDelta]]) folded at read. Operational config, like the
-    * stat-column registry — set via TBLPROPERTIES
-    * (`write.dml.mode`) or [[setDmlMode]].
-    */
-  val CopyOnWrite = "copy-on-write"
-  val MergeOnRead = "merge-on-read"
-  private val dmlModes = new ConcurrentHashMap[String, String]()
-
   def setDmlMode(name: String, mode: String): Unit = {
     require(mode == CopyOnWrite || mode == MergeOnRead,
       s"write.dml.mode must be '$CopyOnWrite' or '$MergeOnRead', got '$mode'")
-    dmlModes.put(name, mode)
-    ()
+    configure(name)(_.copy(dmlMode = mode))
   }
 
-  def dmlModeOf(name: String): String = dmlModes.getOrDefault(name, CopyOnWrite)
+  def dmlModeOf(name: String): String = stateOf(name).fold(CopyOnWrite)(_.config.dmlMode)
 
   /** Per-table VACUUM RETENTION FLOOR in milliseconds — set via
     * TBLPROPERTIES('vacuum.min_age_ms'='…') or [[setVacuumFloor]]; the
@@ -1037,12 +1107,12 @@ object BucketStore {
     * every collection path, not just explicit vacuums. 0 (the
     * default) keeps the pre-floor count-based contract.
     */
-  private val vacuumFloors = new ConcurrentHashMap[String, java.lang.Long]()
-
   def setVacuumFloor(name: String, minAgeMs: Long): Unit = {
     require(minAgeMs >= 0L, s"vacuum.min_age_ms must be >= 0, got $minAgeMs")
-    vacuumFloors.put(name, minAgeMs)
-    persistVacuumFloor(name)
+    locked(name) {
+      configure(name)(_.copy(vacuumMinAgeMs = minAgeMs))
+      persistVacuumFloor(name)
+    }
   }
 
   /** Clear (or lower, via [[setVacuumFloor]]) the retention floor.
@@ -1060,8 +1130,8 @@ object BucketStore {
     * lowering retention fleet-wide bounce readers or wait for their
     * natural reopen.
     */
-  def clearVacuumFloor(name: String): Unit = {
-    vacuumFloors.remove(name)
+  def clearVacuumFloor(name: String): Unit = locked(name) {
+    update(name)(st => st.copy(config = st.config.copy(vacuumMinAgeMs = 0L)))
     persistVacuumFloor(name)
   }
 
@@ -1076,45 +1146,39 @@ object BucketStore {
     * publish carries the floor in its TableConfig anyway.
     */
   private def persistVacuumFloor(name: String): Unit =
-    if (tables.containsKey(name) && isFileBacked(name)) {
+    if (isFileBacked(name)) {
       try refreshManifestStats(name)
       catch { case _: ConcurrentWriteException => refreshManifestStats(name) }
     }
 
-  def vacuumFloorOf(name: String): Long =
-    Option(vacuumFloors.get(name)).map(_.longValue).getOrElse(0L)
+  def vacuumFloorOf(name: String): Long = stateOf(name).fold(0L)(_.config.vacuumMinAgeMs)
 
-  /** The strictest floor among OTHER lineages sharing `dir` (a base
-    * table and its WAP branches share one directory, and a sweep
-    * there must honor every cohabitant's floor) — `except` lets an
-    * explicit per-table vacuum override its OWN floor without
+  /** The strictest floor among OTHER tables of `name`'s lineage sharing
+    * `dir` (a base table and its WAP branches share one directory, and
+    * a sweep there must honor every cohabitant's floor) — `except` lets
+    * an explicit per-table vacuum override its OWN floor without
     * weakening its neighbors'.
     */
-  private def floorSharing(dir: java.nio.file.Path, except: String = ""): Long = {
-    var f = 0L
-    tableDirs.forEach { (n, d) =>
-      if (d == dir && n != except) f = math.max(f, vacuumFloorOf(n))
-    }
-    f
-  }
+  private def floorSharing(name: String, dir: java.nio.file.Path, except: String): Long =
+    lineageTables(name).iterator
+      .collect { case (n, st) if st.dir.contains(dir) && n != except => st.config.vacuumMinAgeMs }
+      .foldLeft(0L)(math.max)
 
   /** CHECK constraints, one boolean SQL expression per table (see
-    * [[CheckConstraint]]). Operational config like [[dmlModes]] — set
+    * [[CheckConstraint]]). Operational config like the DML mode — set
     * via TBLPROPERTIES('check'='...') or [[setCheck]]; enforced at
     * every row-ingesting choke point ([[commitWrite]], [[upsertRows]],
     * [[applyDelta]] inserts) AND task-side in the DSv2 writer — the
     * choke points are this stand-in's driver-resident safety net, the
     * writer is the distributed path a real cluster relies on.
     */
-  private val checks = new ConcurrentHashMap[String, String]()
-
-  def checkOf(name: String): Option[String] = Option(checks.get(name))
+  def checkOf(name: String): Option[String] = stateOf(name).flatMap(_.config.check)
 
   /** Install (or replace) `name`'s CHECK constraint. Like Delta's ADD
     * CONSTRAINT, the EXISTING rows must already satisfy it — a
     * constraint the current data violates is rejected, not recorded.
     */
-  def setCheck(name: String, exprStr: String): Unit = synchronized {
+  def setCheck(name: String, exprStr: String): Unit = locked(name) {
     val t = get(name)
     val bound = CheckConstraint.bind(t.schema, exprStr) // loud on bad columns/type
     // ADD CONSTRAINT must prove the EXISTING rows satisfy the
@@ -1158,11 +1222,11 @@ object BucketStore {
       if (!streamedComplete)
         CheckConstraint.validate(name, exprStr, t.schema, folded(t, b).rows)
     }
-    checks.put(name, exprStr)
-    ()
+    configure(name)(_.copy(check = Some(exprStr)))
   }
 
-  def dropCheck(name: String): Unit = { checks.remove(name); () }
+  def dropCheck(name: String): Unit =
+    update(name)(st => st.copy(config = st.config.copy(check = None)))
 
   /** Named snapshot tags (Iceberg tag / Delta "name a version" UX):
     * tag → retained MVCC version, resolvable wherever a numeric
@@ -1172,104 +1236,94 @@ object BucketStore {
     * not-retained error a numeric read gets. Tag names must not look
     * numeric (they would shadow version literals).
     */
-  private val tags = new ConcurrentHashMap[String, Map[String, Long]]()
-
-  def setTag(name: String, tag: String, version: Option[Long] = None): Long = synchronized {
+  def setTag(name: String, tag: String, version: Option[Long] = None): Long = locked(name) {
     require(tag.nonEmpty && tag.toLongOption.isEmpty,
       s"tag name must be non-empty and non-numeric, got '$tag'")
     val v = version.getOrElse(get(name).version)
     require(retained(name).contains(v),
       s"cannot tag '$name' at v$v — not a retained version (retained: " +
         s"${retained(name).mkString(", ")})")
-    tags.merge(name, Map(tag -> v), (a, b) => a ++ b)
+    configure(name)(c => c.copy(tags = c.tags + (tag -> v)))
     v
   }
 
-  def tagOf(name: String, tag: String): Option[Long] =
-    Option(tags.get(name)).flatMap(_.get(tag))
+  def tagOf(name: String, tag: String): Option[Long] = tagsOf(name).get(tag)
 
   // ——— WAP branches (write-audit-publish) ———
   //
-  // A branch is an ordinary store entry keyed `base#branch` SHARING
-  // the base table's directory: the fork is one zero-copy publish
-  // (every bucket re-references the base head's files by identity),
-  // so every existing read/write/DML/procedure path works on a branch
-  // unchanged — the name routes it. Branch manifests carry the branch
-  // name, versions are globally unique, so lineages in the shared
-  // directory never conflate ([[openFromDisk]] filters by name) and
-  // manifest filenames cannot collide. GC roots are the UNION of all
-  // lineages sharing the directory ([[retainedVersionsSharing]]).
+  // A branch is an ordinary store entry keyed `base#branch` in its
+  // base's lineage, SHARING the base table's directory: the fork is
+  // one zero-copy publish (every bucket re-references the base head's
+  // files by identity), so every existing read/write/DML/procedure path
+  // works on a branch unchanged — the name routes it. Branch manifests
+  // carry the branch name, versions are globally unique, so tables in
+  // the shared directory never conflate ([[openFromDisk]] filters by
+  // name) and manifest filenames cannot collide. GC roots are the UNION
+  // of all tables sharing the directory ([[retainedVersionsSharing]]).
   // Fast-forward publish is the Iceberg WAP contract: main must be
   // UNCHANGED since the fork, else [[ConcurrentWriteException]] — the
   // audit pipeline re-branches from the new head and replays.
 
   def branchName(base: String, branch: String): String = s"$base#$branch"
 
-  /** Reserved tag persisting a branch's fork point in its manifests
-    * (restart-durable; never a valid time-travel target on the branch,
-    * so a misuse fails with the standard not-retained error).
+  /** Reserved tag holding a branch's fork point — what
+    * [[publishBranch]] fast-forward validates against. It rides the
+    * branch's manifests (restart-durable) and is never a valid
+    * time-travel target on the branch, so a misuse fails with the
+    * standard not-retained error.
     */
   val ForkTag: String = "__fork__"
 
-  /** Fork version per branch — what [[publishBranch]] fast-forward
-    * validates against ([[ForkTag]] is the durable copy).
-    */
-  private val branchForkVersions = new ConcurrentHashMap[String, java.lang.Long]()
+  private def forkPointOf(bname: String): Long =
+    tagsOf(bname).getOrElse(ForkTag,
+      throw new IllegalStateException(s"branch '$bname' has no recorded fork point"))
 
   /** Fork `base`'s current head as branch `branch` — zero-copy (one
     * manifest write; every block re-references its existing file).
     * Returns the branch head's version.
     */
-  def createBranch(base: String, branch: String): Long = synchronized {
+  def createBranch(base: String, branch: String): Long = locked(base) {
     require(!base.contains("#"), s"cannot branch a branch ('$base')")
     require(branch.nonEmpty && !branch.contains("#") && !branch.contains("/"),
       s"bad branch name '$branch'")
     val bname = branchName(base, branch)
     require(!exists(bname), s"branch '$branch' of '$base' already exists")
-    val head = get(base)
-    // share the base's directory BEFORE the fork publish so the branch
-    // manifest and its future spills land beside the files they
-    // reference (single GC domain)
-    if (isFileBacked(base)) tableDirs.put(bname, tableDir(base))
-    if (heapOnly.contains(base)) heapOnly.add(bname)
-    dmlModes.put(bname, dmlModeOf(base))
-    checkOf(base).foreach(c => checks.put(bname, c))
-    if (txnsOf(base).nonEmpty) appliedTxns.put(bname, txnsOf(base))
-    // the fork point rides the branch's manifests as a reserved tag,
-    // so fast-forward validation survives a restart (openFromDisk
-    // restores tags); set BEFORE the fork publish so the very first
-    // manifest carries it
-    tags.put(bname, Map(ForkTag -> head.version))
+    val baseSt = state(base)
+    val head = baseSt.history.last
+    // the branch shares the base's directory (the fork manifest and its
+    // future spills land beside the files they reference: one GC
+    // domain) and inherits its DML mode, CHECK and txn marks; its fork
+    // point is its one tag, so the very first manifest carries it. Stat
+    // columns register AFTER the fork publish: warming would force-load
+    // every (possibly evicted) block, and the shared (path, column) stat
+    // cache already serves the branch's pruning — the fork must stay a
+    // pure manifest write
+    val fork = TableState(Vector.empty, 0L,
+      baseSt.config.copy(tags = Map(ForkTag -> head.version), statColumns = Set.empty,
+        vacuumMinAgeMs = 0L),
+      dir = if (baseSt.fileBacked) baseSt.dir else None, heapOnly = baseSt.heapOnly)
     val forked = head.copy(version = versions.incrementAndGet())
-    // stat columns register AFTER the fork publish: warming would
-    // force-load every (possibly evicted) block, and the shared
-    // (path, column) stat cache already serves the branch's pruning —
-    // the fork must stay a pure manifest write
-    publish(bname, forked)
-    registerStatColumns(bname, statColumnsOf(base))
-    branchForkVersions.put(bname, head.version)
+    publish(bname, forked, Some(fork))
+    registerStatColumns(bname, baseSt.config.statColumns)
     forked.version
   }
 
   /** Fast-forward `base` to its branch's head and drop the branch —
-    * the PUBLISH of write-audit-publish. Atomic under the commit lock;
+    * the PUBLISH of write-audit-publish. Atomic under the lineage lock;
     * refuses (loudly) if main moved since the fork, because
     * fast-forwarding would silently discard those commits.
     */
-  def publishBranch(base: String, branch: String): Long = synchronized {
+  def publishBranch(base: String, branch: String): Long = locked(base) {
     val bname = branchName(base, branch)
     require(exists(bname), s"no branch '$branch' of '$base'")
-    val fork = Option(branchForkVersions.get(bname)).map(_.toLong)
-      .orElse(tagsOf(bname).get(ForkTag)) // restart-durable copy
-      .getOrElse(throw new IllegalStateException(
-        s"branch '$bname' has no recorded fork point"))
+    val fork = forkPointOf(bname)
     val mainHead = get(base)
     if (mainHead.version != fork)
       throw new ConcurrentWriteException(
         s"cannot fast-forward '$base' to branch '$branch': main moved since the fork " +
           s"(v$fork → v${mainHead.version}) — branch from the current head and replay")
     // txn marks recorded on the branch travel with its batches
-    recordTxnsFrom(base, txnsOf(bname))
+    configure(base)(c => c.copy(txns = mergeTxns(c.txns, txnsOf(bname))))
     val published = get(bname).copy(version = versions.incrementAndGet())
     publish(base, published)
     dropBranch(base, branch)
@@ -1288,76 +1342,67 @@ object BucketStore {
     * (main's untouched blocks NULL-pad at read, the standing
     * schema-evolution contract). Returns the rebased head's version.
     */
-  def rebaseBranch(base: String, branch: String): Long = synchronized {
+  def rebaseBranch(base: String, branch: String): Long = locked(base) {
     val bname = branchName(base, branch)
     require(exists(bname), s"no branch '$branch' of '$base'")
-    val fork = Option(branchForkVersions.get(bname)).map(_.toLong)
-      .orElse(tagsOf(bname).get(ForkTag))
-      .getOrElse(throw new IllegalStateException(
-        s"branch '$bname' has no recorded fork point"))
+    val fork = forkPointOf(bname)
     val mainHead = get(base)
-    if (mainHead.version == fork) return currentVersion(bname) // nothing moved
-    def conflict(why: String): Nothing = throw new ConcurrentWriteException(
-      s"cannot rebase branch '$branch' of '$base': $why — re-branch from the current " +
-        "head and replay")
-    val forkSnap = history(base).find(_.version == fork).getOrElse(
-      conflict(s"fork version v$fork is no longer retained"))
-    val bhead = get(bname)
-    if (mainHead.layoutEpoch != forkSnap.layoutEpoch ||
-      bhead.layoutEpoch != forkSnap.layoutEpoch)
-      conflict("the bucket layout changed since the fork")
-    if (mainHead.schema != forkSnap.schema)
-      conflict("main's schema changed since the fork")
-    if (!(mainHead.zBounds.isEmpty && forkSnap.zBounds.isEmpty) &&
-      !mainHead.zBounds.exists(zb => forkSnap.zBounds.exists(_ eq zb)))
-      conflict("main's z-order rank boundaries changed since the fork")
-    val branchChanged = bhead.buckets.indices
-      .filter(b => !bucketUnchanged(bhead, forkSnap, b)).toSet
-    val mainChanged = mainHead.buckets.indices
-      .filter(b => !bucketUnchanged(mainHead, forkSnap, b)).toSet
-    val overlap = branchChanged.intersect(mainChanged)
-    if (overlap.nonEmpty)
-      conflict(s"bucket(s) ${overlap.toSeq.sorted.mkString(", ")} changed on both sides")
-    val blocks = Array.tabulate(mainHead.buckets.length) { b =>
-      if (branchChanged.contains(b)) bhead.buckets.block(b) else mainHead.buckets.block(b)
+    if (mainHead.version == fork) currentVersion(bname) // nothing moved
+      else {
+      def conflict(why: String): Nothing = throw new ConcurrentWriteException(
+        s"cannot rebase branch '$branch' of '$base': $why — re-branch from the current " +
+          "head and replay")
+      val forkSnap = history(base).find(_.version == fork).getOrElse(
+        conflict(s"fork version v$fork is no longer retained"))
+      val bhead = get(bname)
+      if (mainHead.layoutEpoch != forkSnap.layoutEpoch ||
+        bhead.layoutEpoch != forkSnap.layoutEpoch)
+        conflict("the bucket layout changed since the fork")
+      if (mainHead.schema != forkSnap.schema)
+        conflict("main's schema changed since the fork")
+      if (!(mainHead.zBounds.isEmpty && forkSnap.zBounds.isEmpty) &&
+        !mainHead.zBounds.exists(zb => forkSnap.zBounds.exists(_ eq zb)))
+        conflict("main's z-order rank boundaries changed since the fork")
+      val branchChanged = bhead.buckets.indices
+        .filter(b => !bucketUnchanged(bhead, forkSnap, b)).toSet
+      val mainChanged = mainHead.buckets.indices
+        .filter(b => !bucketUnchanged(mainHead, forkSnap, b)).toSet
+      val overlap = branchChanged.intersect(mainChanged)
+      if (overlap.nonEmpty)
+        conflict(s"bucket(s) ${overlap.toSeq.sorted.mkString(", ")} changed on both sides")
+      val blocks = Array.tabulate(mainHead.buckets.length) { b =>
+        if (branchChanged.contains(b)) bhead.buckets.block(b) else mainHead.buckets.block(b)
+      }
+      val mor = mainHead.mor.filter { case (b, _) => !branchChanged.contains(b) } ++
+        bhead.mor.filter { case (b, _) => branchChanged.contains(b) }
+      // advance the fork point BEFORE the publish so the rebased head's
+      // manifest carries it (restart durability)
+      configure(bname)(_.copy(tags = Map(ForkTag -> mainHead.version)))
+      val rebased = bhead.copy(buckets = new BucketBlocks(blocks), mor = mor,
+        version = versions.incrementAndGet())
+      publish(bname, rebased)
+      rebased.version
     }
-    val mor = mainHead.mor.filter { case (b, _) => !branchChanged.contains(b) } ++
-      bhead.mor.filter { case (b, _) => branchChanged.contains(b) }
-    // advance the fork point BEFORE the publish so the rebased head's
-    // manifest carries it (restart durability)
-    tags.put(bname, Map(ForkTag -> mainHead.version))
-    branchForkVersions.put(bname, mainHead.version)
-    val rebased = bhead.copy(buckets = new BucketBlocks(blocks), mor = mor,
-      version = versions.incrementAndGet())
-    publish(bname, rebased)
-    rebased.version
   }
 
-  /** Abandon a branch: forget its lineage and GC the files only it
+  /** Abandon a branch: forget its state and GC the files only it
     * referenced (everything main references stays — shared-dir union
     * roots). The audit-failed exit of WAP; main never saw the batch.
     */
-  def dropBranch(base: String, branch: String): Boolean = synchronized {
+  def dropBranch(base: String, branch: String): Boolean = locked(base) {
     val bname = branchName(base, branch)
-    branchForkVersions.remove(bname)
-    firstVersions.remove(bname)
-    statColumns.remove(bname)
-    dmlModes.remove(bname)
-    checks.remove(bname)
-    vacuumFloors.remove(bname)
-    tags.remove(bname)
-    heapOnly.remove(bname)
-    appliedTxns.remove(bname)
-    val dir = Option(tableDirs.remove(bname))
-    val existed = tables.remove(bname) != null
-    if (existed) dir.foreach { d =>
-      // the branch is being abandoned ON PURPOSE: its manifests must
-      // stop acting as (unloaded-lineage) GC roots before the sweep,
-      // or the batch's files would be protected forever
-      FileStore.deleteManifestsOf(d, bname)
-      FileStore.gc(d, retainedVersionsSharing(d), floorSharing(d, except = bname)): Unit
+    lineageOf(bname).flatMap(_.remove(bname)) match {
+      case None => false
+      case Some(st) =>
+        st.dir.foreach { d =>
+          // the branch is being abandoned ON PURPOSE: its manifests must
+          // stop acting as (unloaded-table) GC roots before the sweep,
+          // or the batch's files would be protected forever
+          FileStore.deleteManifestsOf(d, bname)
+          FileStore.gc(d, retainedVersionsSharing(base, d), floorSharing(base, d, except = bname)): Unit
+        }
+        true
     }
-    existed
   }
 
   /** ROLLBACK: reinstate retained snapshot `toVersion` as the new
@@ -1371,7 +1416,7 @@ object BucketStore {
     * in-flight write planned against the abandoned head fails its
     * epoch check instead of mis-routing.
     */
-  def rollback(name: String, toVersion: Long): Long = synchronized {
+  def rollback(name: String, toVersion: Long): Long = locked(name) {
     val t = get(name)
     require(t.version != toVersion,
       s"rollback('$name', $toVersion): already the current version")
@@ -1389,44 +1434,30 @@ object BucketStore {
   /** Live branches of `base` (specs/ops). */
   def branchesOf(base: String): Seq[String] = {
     val prefix = base + "#"
-    val out = Vector.newBuilder[String]
-    tables.forEach((n, _) => if (n.startsWith(prefix)) out += n.stripPrefix(prefix))
-    out.result().sorted
+    lineageTables(base).keys.filter(_.startsWith(prefix)).map(_.stripPrefix(prefix)).toSeq.sorted
   }
 
-  /** Versions retained by EVERY lineage sharing `dir` (a base table
-    * and its branches) — the GC root set for that directory.
+  /** Versions retained by EVERY table sharing `dir` (a base table and
+    * its branches) — the GC root set for that directory.
     *
-    * Lineages NOT loaded in this process count too: after a restart
-    * that reopened only the base, the branch still exists ON DISK, and
-    * its manifests are the only record of which files it needs — so
-    * every on-disk manifest whose lineage name is not currently loaded
-    * is a root. Loaded lineages are governed by their IN-HEAP retained
-    * window (their stale on-disk manifests are exactly what GC exists
-    * to collect); a lineage being dropped on purpose deletes its
-    * manifests first ([[FileStore.deleteManifestsOf]]), which is what
-    * releases its roots.
+    * Tables NOT loaded in this process count too: after a restart that
+    * reopened only the base, the branch still exists ON DISK, and its
+    * manifests are the only record of which files it needs — so every
+    * on-disk manifest whose table is not currently loaded is a root.
+    * Loaded tables are governed by their IN-HEAP retained window (their
+    * stale on-disk manifests are exactly what GC exists to collect); a
+    * branch being dropped on purpose deletes its manifests first
+    * ([[FileStore.deleteManifestsOf]]), which is what releases its
+    * roots.
     */
-  private def retainedVersionsSharing(dir: java.nio.file.Path): Set[Long] = {
-    val loaded = scala.collection.mutable.Set[String]()
-    val b = Set.newBuilder[Long]
-    tableDirs.forEach { (n, d) =>
-      if (d == dir) {
-        val hist = tables.get(n)
-        if (hist != null) {
-          loaded += n
-          hist.foreach(t => b += t.version)
-        }
-      }
-    }
-    FileStore.manifestIndex(dir).foreach { case (n, v) =>
-      if (!loaded.contains(n)) b += v
-    }
-    b.result()
+  private def retainedVersionsSharing(name: String, dir: java.nio.file.Path): Set[Long] = {
+    val loaded = lineageTables(name).filter(_._2.dir.contains(dir))
+    loaded.valuesIterator.flatMap(_.history.iterator.map(_.version)).toSet ++
+      FileStore.manifestIndex(dir).collect { case (n, v) if !loaded.contains(n) => v }
   }
 
   def tagsOf(name: String): Map[String, Long] =
-    Option(tags.get(name)).getOrElse(Map.empty)
+    stateOf(name).fold(Map.empty[String, Long])(_.config.tags)
 
   private def enforceCheck(name: String, schema: StructType,
       byBucket: Array[Array[Row]]): Unit =
@@ -1441,7 +1472,8 @@ object BucketStore {
     * snapshot and the skip statistics cache composes with it. Weak
     * keys let vacuumed snapshots' state age out.
     */
-  private val foldCache = new java.util.WeakHashMap[BucketMor, FoldedBucket]()
+  private val foldCache = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[BucketMor, FoldedBucket]())
 
   /** THE merge-on-read fold: live base rows (physical order — which is
     * cluster order for clustered tables) merged with live delta rows,
@@ -1450,14 +1482,8 @@ object BucketStore {
     */
   def folded(t: BucketTable, b: Int): FoldedBucket = t.mor.get(b) match {
     case None => FoldedBucket(t.buckets(b), null)
-    case Some(m) => foldCache.synchronized {
-      var f = foldCache.get(m)
-      if (f == null) {
-        f = fold(t.schema, t.clusterCol, t.zBounds, t.buckets(b), m, t.zKeyVersion)
-        foldCache.put(m, f)
-      }
-      f
-    }
+    case Some(m) => foldCache.computeIfAbsent(m,
+      _ => fold(t.schema, t.clusterCol, t.zBounds, t.buckets(b), m, t.zKeyVersion))
   }
 
   /** Live rows of bucket `b` in serving order — what every reader,
@@ -1557,7 +1583,7 @@ object BucketStore {
 
   /** Fire the auto-compaction policy after a MoR-growing publish (all
     * such paths — [[applyDelta]], [[deleteWhere]]'s merge-on-read
-    * branch — call this; object-lock reentrant, same statement).
+    * branch — call this; lineage-lock reentrant, same statement).
     */
   private def maybeAutoCompact(name: String, next: BucketTable): Unit = {
     val pending = morPendingRows(next)
@@ -1579,7 +1605,7 @@ object BucketStore {
     * concurrency, the price of positional deletes.
     */
   def applyDelta(name: String, deletes: Array[Array[Int]], inserts: Array[Array[Row]],
-      expectedLayoutEpoch: Long, expectedVersion: Long): Unit = synchronized {
+      expectedLayoutEpoch: Long, expectedVersion: Long): Unit = locked(name) {
     val t1 = get(name)
     require(deletes.length == t1.buckets.length && inserts.length == t1.buckets.length,
       s"delta planned ${deletes.length}/${inserts.length} buckets but '$name' has " +
@@ -1663,7 +1689,7 @@ object BucketStore {
     * bounds it between compactions). Returns the number of buckets
     * materialized; publishes nothing when there is nothing to fold.
     */
-  def compact(name: String): Int = synchronized {
+  def compact(name: String): Int = locked(name) {
     val t = get(name)
     if (t.mor.isEmpty) 0
     else {
@@ -1728,26 +1754,24 @@ object BucketStore {
     */
   def ensureLoaded(spark: SparkSession, name: String, dir: String, table: String,
       keyCol: String, numBuckets: Int, clusterBy: Option[String] = None,
-      replicate: Boolean = false): Unit = {
-    val key = s"$name"
-    if (!tables.containsKey(key)) synchronized {
-      if (!tables.containsKey(key)) {
+      replicate: Boolean = false): Unit =
+    if (!exists(name)) locked(name) {
+      if (!exists(name)) {
         // events needs the nanos-aware loader (raw parquet read throws
         // PARQUET_TYPE_ILLEGAL on its TIMESTAMP(NANOS) column)
         val df =
           if (table == "events") graft.tables.Tables.events(spark, dir)
           else graft.tables.Tables.load(spark, dir, table)
-        load(spark, key, df, keyCol, numBuckets, clusterBy = clusterBy, replicate = replicate)
+        load(spark, name, df, keyCol, numBuckets, clusterBy = clusterBy, replicate = replicate)
       }
     }
-  }
 
-  def exists(name: String): Boolean = tables.containsKey(name)
+  def exists(name: String): Boolean = stateOf(name).isDefined
 
   /** All table names currently in the store (catalog SHOW TABLES). */
   def tableNames(): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    tables.keySet().asScala.toSeq.sorted
+    lineages.values().asScala.iterator.flatMap(_.all.keys).toSeq.sorted
   }
 
   /** Catalog CREATE TABLE: install an empty table (schema + layout, no
@@ -1763,10 +1787,11 @@ object BucketStore {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     require(!replicate || numBuckets == 1,
       s"a replicated table has exactly ONE logical bucket (every host holds it); got $numBuckets")
-    // under the publish lock: a concurrent load()'s read-modify-write
-    // of the history vector must not interleave with this putIfAbsent
-    // (it would silently replace the created table)
-    synchronized {
+    // under the lineage lock: a concurrent load()'s publish must not
+    // interleave with this install (it would silently replace the
+    // created table)
+    locked(name) {
+      require(!exists(name), s"BucketStore table '$name' already exists")
       val empty = BucketTable(schema, keyCol,
         Array.fill(numBuckets)(Array.empty[Row]),
         if (replicate) Array(fleetOf(nHosts))
@@ -1775,10 +1800,7 @@ object BucketStore {
         clusterBy,
         commitTs = nextStamp(),
         replicated = replicate)
-      val prev = tables.putIfAbsent(name, Vector(empty))
-      require(prev == null, s"BucketStore table '$name' already exists")
-      firstVersions.putIfAbsent(name, empty.version)
-      ()
+      install(name, TableState(Vector(empty), empty.version))
     }
   }
 
@@ -1796,7 +1818,7 @@ object BucketStore {
     * one-off cost of fixing a layout, paid under MVCC so reads never
     * block.
     */
-  def rebucket(name: String, numBuckets: Int, hrw: Boolean = false): Long = synchronized {
+  def rebucket(name: String, numBuckets: Int, hrw: Boolean = false): Long = locked(name) {
     require(numBuckets > 0, s"rebucket('$name'): numBuckets must be positive, got $numBuckets")
     val t = get(name)
     // same-count rebucket is a no-op ONLY when the placement function
@@ -1885,7 +1907,7 @@ object BucketStore {
     * candidates ([[BucketSplits.plan]]), mirroring the reference's
     * all-known-URLs fallback (SnappyDataConnectorHelper.scala:186-193).
     */
-  def reassignHosts(name: String, bucket: Int, newHosts: Seq[String]): Unit = synchronized {
+  def reassignHosts(name: String, bucket: Int, newHosts: Seq[String]): Unit = locked(name) {
     val t = get(name)
     require(bucket >= 0 && bucket < t.hosts.length,
       s"reassignHosts('$name'): bucket $bucket out of range [0, ${t.hosts.length})")
@@ -1990,7 +2012,7 @@ object BucketStore {
     * tables don't satisfy Spark's hash transform) — the scan declares
     * unknown partitioning instead of lying.
     */
-  def repartitionRange(name: String, numBuckets: Int): Long = synchronized {
+  def repartitionRange(name: String, numBuckets: Int): Long = locked(name) {
     require(numBuckets > 0,
       s"repartition_range('$name'): numBuckets must be positive, got $numBuckets")
     val t = get(name)
@@ -2034,7 +2056,7 @@ object BucketStore {
     * dimension of the layout: pay one in-bucket sort (no shuffle — rows
     * never change buckets), serve time/range queries ∝ answer after.
     */
-  def recluster(name: String, col: String): Long = synchronized {
+  def recluster(name: String, col: String): Long = locked(name) {
     val t = get(name)
     val cols = clusterColsOf(Some(col))
     require(cols.nonEmpty, s"recluster('$name'): empty cluster key")
@@ -2091,7 +2113,7 @@ object BucketStore {
     * at 100 TB each storage node re-sorts its own buckets with no
     * shuffle, cost ∝ table like any compaction, scheduled off-peak.
     */
-  def reorder(name: String): Long = synchronized {
+  def reorder(name: String): Long = locked(name) {
     val t = get(name)
     require(isZOrder(t.clusterCol),
       s"reorder('$name'): table is not z-ordered " +
@@ -2127,41 +2149,42 @@ object BucketStore {
     * whole table every epoch regardless of churn).
     */
   def upsertRows(name: String, byBucket: Array[Array[Row]],
-      expectedLayoutEpoch: Long, txn: Option[(String, Long)] = None): Unit = synchronized {
-    if (txnAlreadyApplied(name, txn)) return
-    val t0 = get(name)
-    require(byBucket.length == t0.buckets.length,
-      s"upsert into '$name': got ${byBucket.length} buckets, table has ${t0.buckets.length}")
-    requireLayoutUnchanged(name, t0, expectedLayoutEpoch)
-    enforceCheck(name, t0.schema, byBucket)
-    val t = freezeZBounds(t0, byBucket.iterator.flatten)
-    val keyIdx = t.schema.fieldIndex(t.keyCol)
-    val rows = t.buckets.zipWithIndex.map { case (base, b) =>
-      val incoming = byBucket(b)
-      if (incoming.isEmpty) base // untouched bucket: same array reference
-      else {
-        // a rewritten bucket folds pending MOR state first (clean
-        // buckets: identity pass-through)
-        val old = effectiveRows(t, b)
-        // latest wins WITHIN the batch too: a key delivered twice in
-        // one epoch keeps only its last row — otherwise both would
-        // append and the keyed table silently grows duplicate keys
-        val lastPerKey = new scala.collection.mutable.HashMap[Any, Int]()
-        incoming.zipWithIndex.foreach { case (r, i) => lastPerKey(r.get(keyIdx)) = i }
-        val deduped = incoming.zipWithIndex.collect {
-          case (r, i) if lastPerKey(r.get(keyIdx)) == i => r
+      expectedLayoutEpoch: Long, txn: Option[(String, Long)] = None): Unit = locked(name) {
+    if (!txnAlreadyApplied(name, txn)) {
+      val t0 = get(name)
+      require(byBucket.length == t0.buckets.length,
+        s"upsert into '$name': got ${byBucket.length} buckets, table has ${t0.buckets.length}")
+      requireLayoutUnchanged(name, t0, expectedLayoutEpoch)
+      enforceCheck(name, t0.schema, byBucket)
+      val t = freezeZBounds(t0, byBucket.iterator.flatten)
+      val keyIdx = t.schema.fieldIndex(t.keyCol)
+      val rows = t.buckets.zipWithIndex.map { case (base, b) =>
+        val incoming = byBucket(b)
+        if (incoming.isEmpty) base // untouched bucket: same array reference
+        else {
+          // a rewritten bucket folds pending MOR state first (clean
+          // buckets: identity pass-through)
+          val old = effectiveRows(t, b)
+          // latest wins WITHIN the batch too: a key delivered twice in
+          // one epoch keeps only its last row — otherwise both would
+          // append and the keyed table silently grows duplicate keys
+          val lastPerKey = new scala.collection.mutable.HashMap[Any, Int]()
+          incoming.zipWithIndex.foreach { case (r, i) => lastPerKey(r.get(keyIdx)) = i }
+          val deduped = incoming.zipWithIndex.collect {
+            case (r, i) if lastPerKey(r.get(keyIdx)) == i => r
+          }
+          val newKeys = lastPerKey.keySet
+          // survivors keep their sorted order (filter preserves it); only
+          // the delivered rows need sorting before the merge
+          clusterMerge(t.schema, t.clusterCol,
+            old.filterNot(r => newKeys.contains(r.get(keyIdx))), deduped, t.zBounds,
+            t.zKeyVersion)
         }
-        val newKeys = lastPerKey.keySet
-        // survivors keep their sorted order (filter preserves it); only
-        // the delivered rows need sorting before the merge
-        clusterMerge(t.schema, t.clusterCol,
-          old.filterNot(r => newKeys.contains(r.get(keyIdx))), deduped, t.zBounds,
-          t.zKeyVersion)
       }
+      recordTxnAndPublish(name, txn,
+        t.copy(buckets = rows, version = versions.incrementAndGet(),
+          mor = t.mor.filter { case (b, _) => byBucket(b).isEmpty }))
     }
-    recordTxnAndPublish(name, txn,
-      t.copy(buckets = rows, version = versions.incrementAndGet(),
-        mor = t.mor.filter { case (b, _) => byBucket(b).isEmpty }))
   }
 
   /** Freeze a z-layout's rank boundaries at its FIRST data commit:
@@ -2200,46 +2223,19 @@ object BucketStore {
         "write planning and commit; rows routed by the old layout would be silently " +
         "mis-placed. Re-run the write against the new layout.")
 
-  /** Catalog DROP TABLE — removes the table AND its whole MVCC history.
-    * Under the publish monitor: a drop racing a concurrent publish's
-    * read-modify-write (`tables.getOrDefault … tables.put`) could
-    * otherwise resurrect the dropped table with its full history, and
-    * `firstVersions`/`tables` must go together or a re-CREATE inherits
-    * the stale first-version floor.
+  /** Catalog DROP TABLE — removes the table AND its whole MVCC history;
+    * a base table takes its WAP branches with it (their directory goes
+    * away). Under the lineage lock, so a concurrent publish can neither
+    * resurrect the table nor hand a re-CREATE its stale state.
     */
-  def drop(name: String): Boolean = synchronized {
+  def drop(name: String): Boolean = {
     val i = name.indexOf('#')
     if (i >= 0) dropBranch(name.substring(0, i), name.substring(i + 1))
-    else {
-      // a base drop takes its branches with it — the directory goes away
-      branchesOf(name).foreach { br =>
-        val bname = branchName(name, br)
-        branchForkVersions.remove(bname)
-        firstVersions.remove(bname)
-        statColumns.remove(bname)
-        dmlModes.remove(bname)
-        checks.remove(bname)
-        vacuumFloors.remove(bname)
-        tags.remove(bname)
-        heapOnly.remove(bname)
-        appliedTxns.remove(bname)
-        tableDirs.remove(bname)
-        tables.remove(bname)
-        refreshPolicies.remove(bname)
-        lastStalenessCheck.remove(bname)
-      }
-      refreshPolicies.remove(name)
-      lastStalenessCheck.remove(name)
-      firstVersions.remove(name)
-      statColumns.remove(name)
-      dmlModes.remove(name)
-      checks.remove(name)
-      vacuumFloors.remove(name)
-      tags.remove(name)
-      heapOnly.remove(name)
-      appliedTxns.remove(name)
-      Option(tableDirs.remove(name)).foreach(FileStore.dropDir)
-      tables.remove(name) != null
+    else locked(name) {
+      val st = stateOf(name)
+      lineages.remove(name)
+      st.flatMap(_.dir).foreach(FileStore.dropDir)
+      st.isDefined
     }
   }
 
@@ -2248,17 +2244,8 @@ object BucketStore {
     * for a JVM restart (spec/ops hook); contrast [[drop]], which
     * deletes the directory too.
     */
-  def unload(name: String): Option[java.nio.file.Path] = synchronized {
-    firstVersions.remove(name)
-    statColumns.remove(name)
-    dmlModes.remove(name)
-    checks.remove(name)
-    vacuumFloors.remove(name)
-    tags.remove(name)
-    heapOnly.remove(name)
-    appliedTxns.remove(name)
-    tables.remove(name)
-    Option(tableDirs.remove(name))
+  def unload(name: String): Option[java.nio.file.Path] = locked(name) {
+    lineageOf(name).flatMap(_.remove(name)).flatMap(_.dir)
   }
 
   /** Job-level atomic publish for the DSv2 write path: merge the
@@ -2272,74 +2259,75 @@ object BucketStore {
     */
   def commitWrite(name: String, byBucket: Array[Array[Row]], truncate: Boolean,
       expectedLayoutEpoch: Long, txn: Option[(String, Long)] = None): Unit =
-    synchronized {
+    locked(name) {
       // idempotent replay (txnappid/txnversion): an already-applied
       // batch commits NOTHING — the retry contract
-      if (txnAlreadyApplied(name, txn)) return
-      val t0 = get(name)
-      require(byBucket.length == t0.buckets.length,
-        s"write planned ${byBucket.length} buckets but '$name' has ${t0.buckets.length}")
-      requireLayoutUnchanged(name, t0, expectedLayoutEpoch)
-      enforceCheck(name, t0.schema, byBucket)
-      val t = freezeZBounds(t0, byBucket.iterator.flatten)
-      val rows: BucketBlocks =
-        if (truncate)
-          // per-bucket sorts are independent (pure key extraction +
-          // stable sort) — run them on the spill pool, the commit-point
-          // analog of write tasks each sorting their own bucket. A
-          // full-table clustered load paid 16 sequential sorts under
-          // the commit lock before round 21.
-          BucketBlocks.fromArrays {
-            if (t.clusterCol.isEmpty || byBucket.count(_.nonEmpty) <= 1)
-              byBucket.map(clusterSort(t.schema, t.clusterCol, _, t.zBounds, t.zKeyVersion))
-            else {
-              // INVARIANT (r22, ADVICE r21): this join happens while the
-              // caller holds the global BucketStore monitor, so pool
-              // tasks submitted here must NEVER enter
-              // BucketStore.synchronized — pure key extraction + sort
-              // only, or the commit deadlocks against its own workers.
-              val out = new Array[Array[Row]](byBucket.length)
-              val futures = byBucket.indices.map { b =>
-                FileStore.spillPool.submit(new java.util.concurrent.Callable[Unit] {
-                  override def call(): Unit =
-                    out(b) = clusterSort(t.schema, t.clusterCol, byBucket(b),
-                      t.zBounds, t.zKeyVersion)
-                })
-              }
-              // propagate the FIRST failure loudly, unwrapped from the
-              // pool's ExecutionException so callers see the real error
-              futures.foreach { f =>
-                try f.get()
-                catch {
-                  case e: java.util.concurrent.ExecutionException =>
-                    throw Option(e.getCause).getOrElse(e)
+      if (!txnAlreadyApplied(name, txn)) {
+        val t0 = get(name)
+        require(byBucket.length == t0.buckets.length,
+          s"write planned ${byBucket.length} buckets but '$name' has ${t0.buckets.length}")
+        requireLayoutUnchanged(name, t0, expectedLayoutEpoch)
+        enforceCheck(name, t0.schema, byBucket)
+        val t = freezeZBounds(t0, byBucket.iterator.flatten)
+        val rows: BucketBlocks =
+          if (truncate)
+            // per-bucket sorts are independent (pure key extraction +
+            // stable sort) — run them on the spill pool, the commit-point
+            // analog of write tasks each sorting their own bucket. A
+            // full-table clustered load paid 16 sequential sorts under
+            // the commit lock before round 21.
+            BucketBlocks.fromArrays {
+              if (t.clusterCol.isEmpty || byBucket.count(_.nonEmpty) <= 1)
+                byBucket.map(clusterSort(t.schema, t.clusterCol, _, t.zBounds, t.zKeyVersion))
+              else {
+                // INVARIANT (r22, ADVICE r21): this join happens while the
+                // caller holds the table's lineage lock, so pool tasks
+                // submitted here must NEVER take a lineage lock — pure key
+                // extraction + sort only, or the commit deadlocks against
+                // its own workers.
+                val out = new Array[Array[Row]](byBucket.length)
+                val futures = byBucket.indices.map { b =>
+                  FileStore.spillPool.submit(new java.util.concurrent.Callable[Unit] {
+                    override def call(): Unit =
+                      out(b) = clusterSort(t.schema, t.clusterCol, byBucket(b),
+                        t.zBounds, t.zKeyVersion)
+                  })
                 }
+                // propagate the FIRST failure loudly, unwrapped from the
+                // pool's ExecutionException so callers see the real error
+                futures.foreach { f =>
+                  try f.get()
+                  catch {
+                    case e: java.util.concurrent.ExecutionException =>
+                      throw Option(e.getCause).getOrElse(e)
+                  }
+                }
+                out
               }
-              out
             }
+          else t.buckets.mapRetaining { b =>
+            // clustered-index maintenance on ingest: only buckets that
+            // received rows change, and each pays a DELTA sort + linear
+            // merge, never a full re-sort ([[clusterMerge]]). A bucket
+            // with pending MOR state folds it first. Buckets receiving
+            // NO rows RETAIN their block (round 17): same instance, same
+            // backing file, never loaded — appending one row to a cold
+            // 100 TB table faults exactly the one receiving bucket, not
+            // the table (the old zipWithIndex path materialized every
+            // bucket's rows just to hand them back).
+            if (byBucket(b).isEmpty) None
+            else Some(clusterMerge(t.schema, t.clusterCol, effectiveRows(t, b), byBucket(b),
+              t.zBounds, t.zKeyVersion))
           }
-        else t.buckets.mapRetaining { b =>
-          // clustered-index maintenance on ingest: only buckets that
-          // received rows change, and each pays a DELTA sort + linear
-          // merge, never a full re-sort ([[clusterMerge]]). A bucket
-          // with pending MOR state folds it first. Buckets receiving
-          // NO rows RETAIN their block (round 17): same instance, same
-          // backing file, never loaded — appending one row to a cold
-          // 100 TB table faults exactly the one receiving bucket, not
-          // the table (the old zipWithIndex path materialized every
-          // bucket's rows just to hand them back).
-          if (byBucket(b).isEmpty) None
-          else Some(clusterMerge(t.schema, t.clusterCol, effectiveRows(t, b), byBucket(b),
-            t.zBounds, t.zKeyVersion))
-        }
-      val mor =
-        if (truncate) Map.empty[Int, BucketMor]
-        else t.mor.filter { case (b, _) => byBucket(b).isEmpty }
-      // record BEFORE the publish so the version's own manifest carries
-      // the high-water mark (same-commit durability); rolled back if
-      // the publish fails, so a retry is never a silent no-op
-      recordTxnAndPublish(name, txn,
-        t.copy(buckets = rows, version = versions.incrementAndGet(), mor = mor))
+        val mor =
+          if (truncate) Map.empty[Int, BucketMor]
+          else t.mor.filter { case (b, _) => byBucket(b).isEmpty }
+        // record BEFORE the publish so the version's own manifest carries
+        // the high-water mark (same-commit durability); rolled back if
+        // the publish fails, so a retry is never a silent no-op
+        recordTxnAndPublish(name, txn,
+          t.copy(buckets = rows, version = versions.incrementAndGet(), mor = mor))
+      }
     }
 
   /** Row-level DELETE: drop the rows matching `pred` from every bucket
@@ -2347,7 +2335,7 @@ object BucketStore {
     * [[commitWrite]]). Untouched buckets share their array with the
     * previous snapshot. Returns the number of rows deleted.
     */
-  def deleteWhere(name: String, pred: Row => Boolean): Long = synchronized {
+  def deleteWhere(name: String, pred: Row => Boolean): Long = locked(name) {
     val t = get(name)
     var deleted = 0L
     if (dmlModeOf(name) == MergeOnRead) {
@@ -2406,9 +2394,8 @@ object BucketStore {
     * observability for the gate/spec (the SQL `DELETE` surface returns
     * nothing).
     */
-  private val lastDeleteOutcomes = new ConcurrentHashMap[String, DeleteOutcome]()
   def lastDeleteOutcome(name: String): Option[DeleteOutcome] =
-    Option(lastDeleteOutcomes.get(name))
+    stateOf(name).flatMap(_.lastDeleteOutcome)
 
   /** Statistics-driven row-level DELETE (the `DELETE FROM … WHERE`
     * path, [[BucketedTable.deleteWhere]]): classify every bucket
@@ -2437,7 +2424,7 @@ object BucketStore {
     * steady state.
     */
   def deleteWhereFiltered(name: String,
-      filters: Array[org.apache.spark.sql.sources.Filter]): DeleteOutcome = synchronized {
+      filters: Array[org.apache.spark.sql.sources.Filter]): DeleteOutcome = locked(name) {
     val t = get(name)
     val schema = t.schema
     object Cls extends Enumeration { val Drop, Keep, Scan = Value }
@@ -2573,7 +2560,7 @@ object BucketStore {
     val out = DeleteOutcome(
       cls.count(_ == Cls.Drop), cls.count(_ == Cls.Keep), cls.count(_ == Cls.Scan),
       deleted, evaluated)
-    lastDeleteOutcomes.put(name, out)
+    update(name)(_.copy(lastDeleteOutcome = Some(out)))
     out
   }
 
@@ -2642,7 +2629,7 @@ object BucketStore {
     */
   def replaceGroups(name: String, byBucket: Array[Array[Row]], groups: Set[Int],
       expectedLayoutEpoch: Long, readVersion: Option[Long] = None): Unit =
-    synchronized {
+    locked(name) {
       val t0 = get(name)
       require(byBucket.length == t0.buckets.length,
         s"write planned ${byBucket.length} buckets but '$name' has ${t0.buckets.length}")
@@ -2681,7 +2668,7 @@ object BucketStore {
     * ALTER is atomic: it publishes one version or nothing.
     */
   def addColumns(name: String, fields: Seq[org.apache.spark.sql.types.StructField]): Unit =
-    synchronized {
+    locked(name) {
       val t = get(name)
       val taken = scala.collection.mutable.Set(t.schema.fieldNames.toSeq: _*)
       fields.foreach { field =>
@@ -2709,7 +2696,7 @@ object BucketStore {
     * write factory needs (CTAS builds the factory before first data).
     */
   def rangeBoundsOf(name: String): Option[Array[Any]] =
-    Option(tables.get(name)).flatMap(_.lastOption).flatMap(_.rangeBounds)
+    stateOf(name).flatMap(_.history.lastOption).flatMap(_.rangeBounds)
 
   /** The snapshot published as version `v` — MVCC read path: a scan
     * that pinned `v` at planning keeps reading `v` regardless of later
@@ -2733,7 +2720,7 @@ object BucketStore {
     *
     * The disk follows the heap (round 16): a trim that dropped
     * versions also garbage-collects the files and manifests no
-    * retained lineage references — the same shared-directory union
+    * retained table references — the same shared-directory union
     * roots as publish-time retention GC, so a vacuum can never
     * collect what a branch (loaded or dormant-on-disk) still needs.
     * Before this, explicit vacuum trimmed only the heap window and
@@ -2768,7 +2755,7 @@ object BucketStore {
     * the floor drops (commitTs is monotonic, so the first young
     * version ends the droppable prefix).
     */
-  def vacuum(name: String, keepLast: Int, minAgeMs: Long): Int = synchronized {
+  def vacuum(name: String, keepLast: Int, minAgeMs: Long): Int = locked(name) {
     require(keepLast >= 1, s"vacuum must keep at least the current snapshot, got $keepLast")
     require(minAgeMs >= 0L, s"vacuum retention floor must be >= 0 ms, got $minAgeMs")
     val hist = history(name)
@@ -2787,13 +2774,13 @@ object BucketStore {
       catch { case _: ArithmeticException => Long.MinValue } // commitTs stamps are micros
     val dropped = hist.dropRight(keepLast).takeWhile(_.commitTs < cutoffMicros).length
     if (dropped > 0) {
-      tables.put(name, hist.drop(dropped))
+      update(name)(_.copy(history = hist.drop(dropped)))
       if (isFileBacked(name)) {
         val dir = tableDir(name)
         // an explicit arg overrides THIS table's floor, never a
-        // cohabiting lineage's
-        FileStore.gc(dir, retainedVersionsSharing(dir),
-          math.max(minAgeMs, floorSharing(dir, except = name))): Unit
+        // cohabiting table's
+        FileStore.gc(dir, retainedVersionsSharing(name, dir),
+          math.max(minAgeMs, floorSharing(name, dir, except = name))): Unit
       }
     }
     dropped
@@ -2804,9 +2791,7 @@ object BucketStore {
 
   private def history(name: String): Vector[BucketTable] = {
     maybeInjectFailure()
-    val hist = tables.get(name)
-    require(hist != null, s"BucketStore has no table '$name' — call BucketStore.load first")
-    hist
+    state(name).history
   }
 
   /** Metadata fetch with ONE bounded retry (C9 — reference:
@@ -2815,22 +2800,19 @@ object BucketStore {
     * (IOException) failures retry; a missing table is not transient.
     */
   def getWithRetry(name: String, retries: Int = 1): BucketTable =
-    try get(name)
-    catch {
-      case e: java.io.IOException if retries > 0 =>
-        System.err.println(s"[graft-buckets] transient metadata failure for '$name' " +
-          s"(${e.getMessage}); retrying (${retries} left)")
-        getWithRetry(name, retries - 1)
-    }
+    withRetry(name, retries)(get(name))
 
   /** [[snapshot]] with the same bounded transient-failure retry. */
   def snapshotWithRetry(name: String, v: Long, retries: Int = 1): BucketTable =
-    try snapshot(name, v)
+    withRetry(name, retries)(snapshot(name, v))
+
+  private def withRetry(name: String, retries: Int)(fetch: => BucketTable): BucketTable =
+    try fetch
     catch {
       case e: java.io.IOException if retries > 0 =>
         System.err.println(s"[graft-buckets] transient metadata failure for '$name' " +
           s"(${e.getMessage}); retrying (${retries} left)")
-        snapshotWithRetry(name, v, retries - 1)
+        withRetry(name, retries - 1)(fetch)
     }
 
   // — transient-failure injection (spec hook for the C9 retry path) —

@@ -15,46 +15,24 @@ object BucketedQueries {
   val NumBuckets = 16
 
   /** Drive a streaming write into a catalog table to completion with a
-    * one-shot checkpoint: create the scratch dir, process everything,
-    * stop, and best-effort delete the dir so repeated gated runs don't
-    * accumulate scratch (each run replays from a fresh table).
+    * one-shot scratch checkpoint ([[StreamOps.withScratchCheckpoint]]):
+    * repeated gated runs replay from a fresh table and accumulate no
+    * scratch.
     */
   private def runStreamToTable(df: DataFrame, tableFqn: String, outputMode: String,
-      options: Map[String, String] = Map.empty): Unit = {
-    val spark = df.sparkSession
-    graft.streaming.StreamOps.sweepStaleEphemeralCheckpoints
-    // scratch checkpoint on tmpfs when available: the per-batch
-    // offset/commit logs and state deltas of this ONE-SHOT drive pay
-    // fsync latency for durability nothing ever reads back (the dir is
-    // deleted below); a production stream names a durable location
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm,
-          s"graft_sink_ckpt_${spark.sparkContext.applicationId}_")
-      else java.nio.file.Files
-        .createTempDirectory(s"graft_sink_ckpt_${spark.sparkContext.applicationId}_")
-    // AvailableNow by default, exactly as StreamOps.runToMemory (one
-    // shot, engine-terminated; GRAFT_TRIGGER=processing for A/B)
-    val useAvailableNow = !sys.env.get("GRAFT_TRIGGER").contains("processing")
-    val w = df.writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", ckpt.toString)
-      .options(options)
-    val q = (if (useAvailableNow)
-      w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else w)
-      .toTable(tableFqn)
-    try {
-      if (useAvailableNow) q.awaitTermination() else q.processAllAvailable()
-    } finally {
-      q.stop()
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
+      options: Map[String, String] = Map.empty): Unit =
+    graft.streaming.StreamOps.withScratchCheckpoint("sink") { ckpt =>
+      // AvailableNow, exactly as StreamOps.runToMemory (one shot,
+      // engine-terminated)
+      val q = df.writeStream
+        .outputMode(outputMode)
+        .option("checkpointLocation", ckpt.toString)
+        .options(options)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(tableFqn)
+      try q.awaitTermination()
+      finally q.stop()
     }
-  }
 
   private def bucketedLineitem(spark: SparkSession, dir: String): DataFrame = {
     BucketStore.ensureLoaded(spark, s"lineitem@$dir", dir, "lineitem", "l_orderkey", NumBuckets)

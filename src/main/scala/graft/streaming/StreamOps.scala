@@ -59,7 +59,7 @@ object StreamOps {
     * (ADVICE r21): the per-run dirs are deleted in `finally`, but a
     * crashed/killed JVM leaves RAM-backed checkpoint files
     * accumulating across runs on a long-lived host. Both ephemeral
-    * prefixes (this file's `graft-ckpt-*` and the table sink's
+    * prefixes (`graft-ckpt-*`, and the older table sink's
     * `graft_sink_ckpt_*`) are swept; the age floor keeps a CONCURRENT
     * process's live checkpoints safe — a gate drive finishes in
     * seconds, an hour-old entry is orphaned.
@@ -77,13 +77,36 @@ object StreamOps {
               (try java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff
               catch { case _: Throwable => false })
           }
-          .foreach { p =>
-            try java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-            catch { case _: Throwable => () }
-          }
+          .foreach(deleteTree)
       } catch { case _: Throwable => () }
     }
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
+    } catch { case _: Throwable => () }
+
+  /** Run a ONE-SHOT streaming drive against a throwaway checkpoint and
+    * delete it afterwards (best effort). The checkpoint sits on tmpfs
+    * when available: the per-batch offset/commit logs and state-store
+    * delta files pay real fsync latency on disk (~1s per streaming
+    * query on ext4) for durability nothing ever reads back. A
+    * production writeStream names a DURABLE checkpointLocation and
+    * none of this applies. The directory is named
+    * `graft-ckpt-<tag>-<random>`.
+    */
+  def withScratchCheckpoint[A](tag: String)(body: java.nio.file.Path => A): A = {
+    sweepStaleEphemeralCheckpoints
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val dir =
+      if (java.nio.file.Files.isWritable(shm))
+        java.nio.file.Files.createTempDirectory(shm, s"graft-ckpt-$tag-")
+      else java.nio.file.Files.createTempDirectory(s"graft-ckpt-$tag-")
+    try body(dir)
+    finally deleteTree(dir)
   }
 
   /** Stateful-operator count of the most recent [[runToMemory]] query
@@ -151,42 +174,21 @@ object StreamOps {
     // many-batch source cannot silently rotate early batches out and
     // defeat the guard
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    // A memory-sink gate run's checkpoint is EPHEMERAL by contract
-    // (Spark itself creates and deletes a temp dir for it) — but the
-    // default temp dir sits on disk, and the per-batch offset/commit
-    // logs and state-store delta files pay real fsync latency there
-    // (~1s per streaming query on this ext4). Point the throwaway
-    // checkpoint at tmpfs when available and delete it after the run;
-    // a production writeStream names a DURABLE checkpointLocation and
-    // none of this applies.
-    sweepStaleEphemeralCheckpoints
-    val ckptDir: Option[java.nio.file.Path] = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isWritable(shm))
-        Some(shm.resolve(s"graft-ckpt-$name-${java.util.UUID.randomUUID}"))
-      else None
-    }
-    try {
-      // Trigger.AvailableNow is the DEFAULT for these one-shot gate
-      // drives (r22): same batches, same watermark-close no-data batch,
-      // same results as processAllAvailable on the default trigger —
-      // but the engine stops itself instead of the driver polling a
-      // continuous-trigger query and tearing it down, which measured
-      // −18% on the streaming family (53.2 → 43.8 s, 28 queries).
-      // Every source involved implements SupportsTriggerAvailableNow
-      // (file source natively; the bucket feeds via BucketAvailableNow —
-      // see its scaladoc for why the single-batch fallback would be
-      // WRONG, not just slow). GRAFT_TRIGGER=processing restores the
-      // old drive for A/B.
-      val useAvailableNow = !sys.env.get("GRAFT_TRIGGER").contains("processing")
-      val writer0 = df.writeStream.outputMode(outputMode).format("memory").queryName(name)
-      val writer = ckptDir.fold(writer0)(p => writer0.option("checkpointLocation", p.toString))
-      val q =
-        if (useAvailableNow)
-          writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        else writer.start()
+    try withScratchCheckpoint(name) { ckpt =>
+      // Trigger.AvailableNow drives these one-shot gate runs (r22):
+      // same batches, same watermark-close no-data batch, same results
+      // as processAllAvailable on the default trigger — but the engine
+      // stops itself instead of the driver polling a continuous-trigger
+      // query and tearing it down, which measured −18% on the streaming
+      // family (53.2 → 43.8 s, 28 queries). Every source involved
+      // implements SupportsTriggerAvailableNow (file source natively;
+      // the bucket feeds via BucketAvailableNow — see its scaladoc for
+      // why the single-batch fallback would be WRONG, not just slow).
+      val q = df.writeStream.outputMode(outputMode).format("memory").queryName(name)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       try {
-        if (useAvailableNow) q.awaitTermination() else q.processAllAvailable()
+        q.awaitTermination()
         // The memory sink APPENDS each batch's emission. In update mode
         // a key re-emitted across batches would therefore appear twice
         // in the sink table — correct streaming semantics, wrong as a
@@ -207,26 +209,9 @@ object StreamOps {
       } finally {
         lastStateOperatorCount = q.recentProgress.lastOption
           .map(p => Option(p.stateOperators).map(_.length).getOrElse(0)).getOrElse(-1)
-        if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[stream] $name batch=${p.batchId} rows=${p.numInputRows} " +
-              s"ms=${p.durationMs} state=${Option(p.stateOperators).map(_.length)}")
-          }
-        }
         q.stop()
       }
-    } finally {
-      spark.conf.set(key, prev)
-      // best-effort cleanup of the throwaway tmpfs checkpoint
-      ckptDir.foreach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }
-      }
-    }
+    } finally spark.conf.set(key, prev)
     spark.table(name)
   }
 

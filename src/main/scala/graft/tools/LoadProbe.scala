@@ -9,8 +9,7 @@ import graft.sources.bucketed.BucketStore
   * `BucketStore.load` into its phases — the Spark write job (scan +
   * task-side row conversion + Kryo commit-message transport) vs the
   * driver-side commit (merge + cluster sort + parquet spill +
-  * manifest) — and isolate the parquet spill by re-running with file
-  * backing off. Usage: `LoadProbe <sfDir> [reps]`.
+  * manifest). Usage: `LoadProbe <sfDir> [reps]`.
   */
 object LoadProbe {
   def main(args: Array[String]): Unit = {
@@ -97,18 +96,14 @@ object LoadProbe {
         else graft.tables.Tables.load(spark, sfDir, c.src)
       val n = df.count()
       (1 to reps).foreach { r =>
-        Seq(true, false).foreach { fb =>
-          BucketStore.drop(c.table): Unit
-          BucketStore.fileBackingEnabled = fb
-          val (wall, jobs) = timed {
-            BucketStore.load(spark, c.table, df, c.key, 16, clusterBy = c.clusterBy)
-          }
-          println(f"[loadprobe] ${c.table}%-20s rows=$n%7d fileBacking=$fb%-5s rep $r: " +
-            f"wall $wall%6.3fs jobWall $jobs%6.3fs driverSide ${wall - jobs}%6.3fs")
+        BucketStore.drop(c.table): Unit
+        val (wall, jobs) = timed {
+          BucketStore.load(spark, c.table, df, c.key, 16, clusterBy = c.clusterBy)
         }
+        println(f"[loadprobe] ${c.table}%-20s rows=$n%7d rep $r: " +
+          f"wall $wall%6.3fs jobWall $jobs%6.3fs driverSide ${wall - jobs}%6.3fs")
       }
       BucketStore.drop(c.table): Unit
-      BucketStore.fileBackingEnabled = true
     }
     spark.stop()
   }
